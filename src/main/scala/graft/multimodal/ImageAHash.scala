@@ -1,182 +1,234 @@
 package graft.multimodal
 
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, IndexColorModel}
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.spi.ImageReaderSpi
+import javax.imageio.stream.MemoryCacheImageInputStream
+
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** REAL pixel-level decode for uncompressed BMPs → 8×8 mean-threshold
-  * average hash — the reference's actual perceptual-hash kernel
-  * (image-deduper `src/processing/core.rs:37-104`: decode → grayscale →
-  * 8×8 resize → mean threshold → 64-bit hash). BI_RGB 24/32-bpp BMP: the
-  * pixels are literally in the bytes, so this decoder keeps its own fused
-  * loop; PNG ([[PngPixels]], JDK Inflater), GIF ([[GifPixels]], pure
-  * LZW) and JPEG ([[JpegPixels]], the JDK's ImageIO plugin) decode to a
-  * luma raster and share the same pinned kernel via [[AHashKernel]].
+/** REAL pixel-level decode → 8×8 mean-threshold average hash, the
+  * reference's perceptual-hash kernel (image-deduper
+  * `src/processing/core.rs:37-104`). One decode path for BMP, PNG, GIF,
+  * TIFF and JPEG: the JDK's own `javax.imageio` plugins (java.desktop
+  * module — ships with every JRE, works headless, no external codec), just
+  * as the reference's per-format decoders are thin codec wrappers
+  * (`src/formats/{jpeg,png,tiff}.rs`). The decoded raster feeds the pinned
+  * [[AHashKernel]], so identical pixels hash identically in every
+  * container.
   *
-  * Kernel definition (pinned — goldens and the SQL oracle depend on it):
-  *  - grayscale: integer Rec.601 luma  (299·R + 587·G + 114·B) / 1000
-  *  - resize: 8×8 box mean; cell (cx,cy) covers x ∈ [cx·w/8,(cx+1)·w/8)
-  *    (floor arithmetic; degenerate cells widen to ≥1 pixel so w,h < 8
-  *    still decode)
-  *  - threshold: bit (63 − (cy·8 + cx)) is set iff cellMean > globalMean
-  *    (strict: a solid image hashes to 0)
+  * Work is ordered so hostile input costs a header read at most:
+  *  1. sniff the magic bytes ([[ImageHeader.sniff]]) and pick the reader
+  *     by that format name — never by ImageIO's own probing, which would
+  *     let e.g. the WBMP reader claim arbitrary bytes;
+  *  2. gate on the header before any raster exists: `w·h` ≤ [[MaxPixels]],
+  *     ≤ 4 bands, 8-bit samples unless palette-indexed (this refuses 16-bit
+  *     PNG/TIFF, 16-bpp BMP and a TIFF declaring 120 samples per pixel),
+  *     plus two container checks ImageIO itself is lenient about: PNG chunk
+  *     framing and BMP's BI_RGB with a ≥ 40-byte DIB header;
+  *  3. luma from raster samples — band 0 for gray, the palette for indexed
+  *     color, bands 0–2 for sRGB. Only another color space (e.g. an
+  *     ICC-tagged JPEG) goes through `getRGB`: for gray it would be WRONG,
+  *     mapping through the linear-gray color model into sRGB and bending
+  *     every mid-tone (128 → ~186).
   *
-  * Corrupt-input contract mirrors [[ImageHeader]]: malformed, truncated,
-  * compressed, or non-BMP bytes return null, never throw (S9 recovery).
+  * Corrupt-input contract (S9 recovery): malformed, truncated, oversized or
+  * unsupported bytes return null, never throw. A JPEG scan truncated after
+  * its header decodes leniently (ImageIO fills the missing tail) — hash
+  * what decoded rather than refuse an image that is 95% present.
   */
-object BmpAHash {
+object PixelAHash {
+  import ImageHeader.{be32, le32}
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
-  /** Max decodable dimension: bounds per-row work (tiered-cost posture —
-    * the analog of the reference's size-tiered downscale). A 16k×16k
-    * uncompressed BMP is already 1 GB; anything larger is hostile input.
+  /** Tiered-cost bound (X12), one for every format: compressed containers
+    * let a tiny blob declare a huge raster (decompression bomb). 16.7M px
+    * ≈ 4096², raw RGBA raster ≤ 67 MB — anything larger is hostile input
+    * for a fingerprinting pass and returns null like any undecodable blob.
     */
-  val MaxDim = 16384
+  val MaxPixels: Long = 1L << 24
 
-  /** null (boxed) when not a decodable uncompressed BMP. */
-  def ahash(b: Array[Byte]): java.lang.Long = {
-    if (b == null || b.length < 54) return null
-    try {
-      if (!(u8(b, 0) == 'B' && u8(b, 1) == 'M')) return null
-      val dataOffset = le32(b, 10)
-      val dibSize = le32(b, 14)
-      if (dibSize < 40) return null // BITMAPCOREHEADER etc: not supported
-      val w = le32(b, 18)
-      val hRaw = le32(b, 22)
-      val topDown = hRaw < 0
-      val h = math.abs(hRaw)
-      val bpp = le16(b, 28)
-      val compression = le32(b, 30)
-      if (w <= 0 || h <= 0 || w > MaxDim || h > MaxDim) return null
-      if (compression != 0) return null // BI_RGB only: pixels are raw bytes
-      if (bpp != 24 && bpp != 32) return null
-      val bytesPerPx = bpp / 8
-      val stride = ((bytesPerPx * w + 3) / 4) * 4
-      if (dataOffset < 54 || dataOffset.toLong + stride.toLong * h > b.length)
-        return null
-
-      // 8×8 box mean over integer luma; Long accumulators cannot overflow
-      // (max 16384² px × 255 luma < 2^46)
-      val sums = new Array[Long](64)
-      val counts = new Array[Long](64)
-      var cy = 0
-      while (cy < 8) {
-        val y0 = cy * h / 8
-        val y1 = math.max(y0 + 1, (cy + 1) * h / 8)
-        var y = y0
-        while (y < y1) {
-          val fileRow = if (topDown) y else h - 1 - y
-          val rowOff = dataOffset + fileRow * stride
-          var cx = 0
-          while (cx < 8) {
-            val x0 = cx * w / 8
-            val x1 = math.max(x0 + 1, (cx + 1) * w / 8)
-            var s = 0L
-            var x = x0
-            while (x < x1) {
-              val p = rowOff + x * bytesPerPx
-              // BMP stores BGR(A)
-              val lum = (299 * u8(b, p + 2) + 587 * u8(b, p + 1) + 114 * u8(b, p)) / 1000
-              s += lum
-              x += 1
-            }
-            val cell = cy * 8 + cx
-            sums(cell) += s
-            counts(cell) += (x1 - x0)
-            cx += 1
-          }
-          y += 1
-        }
-        cy += 1
-      }
-      var total = 0L
-      var totalN = 0L
-      var i = 0
-      while (i < 64) { total += sums(i); totalN += counts(i); i += 1 }
-      // compare cell means to the global mean in exact integer arithmetic:
-      // cellSum/cellN > total/totalN  ⇔  cellSum·totalN > total·cellN
-      // (cellSum·totalN ≤ 2^46 · 2^28 < 2^63: no overflow)
-      var hash = 0L
-      i = 0
-      while (i < 64) {
-        if (sums(i) * totalN > total * counts(i)) hash |= 1L << (63 - i)
-        i += 1
-      }
-      java.lang.Long.valueOf(hash)
-    } catch { case _: Exception => null }
+  /** The JDK's reader plugin per sniffed format, looked up once (a
+    * registry lookup per blob would cost more than decoding a small BMP).
+    */
+  private lazy val readers: Map[String, ImageReaderSpi] = {
+    // executor-safe one-time setup: never look for a display
+    System.setProperty("java.awt.headless", "true")
+    Seq("png", "gif", "jpeg", "bmp", "tiff").map { fmt =>
+      fmt -> ImageIO.getImageReadersByFormatName(fmt).next().getOriginatingProvider
+    }.toMap
   }
-}
 
-/** Deterministic BMP synthesis — fixture generator for the aHash oracle
-  * query and the golden tests (the analog of the reference's synthesized
-  * test images, `processing_tests.rs:93-119`). Lives in main because
-  * `SparkEntry.q_image_ahash` builds its oracle-checkable blobs with it.
-  */
-object BmpSynth {
+  /** null (boxed) when not a decodable image; otherwise the pinned kernel. */
+  def ahash(b: Array[Byte]): java.lang.Long = {
+    val img = decodeLuma(b)
+    if (img == null) null
+    else java.lang.Long.valueOf(AHashKernel.ahash(img._1, img._2, img._3))
+  }
 
-  /** Uncompressed BI_RGB BMP with the given geometry; `rgb(x, y)` returns
-    * 0xRRGGBB for the pixel at image coordinates (x left→right, y
-    * top→bottom). Negative `height` convention: pass `topDown = true`.
+  /** Decode to (width, height, row-major luma); null when not a decodable,
+    * size-capped image.
     */
-  def bmp(w: Int, h: Int, bpp: Int = 24, topDown: Boolean = false)
-         (rgb: (Int, Int) => Int): Array[Byte] = {
-    require(bpp == 24 || bpp == 32, "BI_RGB 24/32-bpp only")
-    val bytesPerPx = bpp / 8
-    val stride = ((bytesPerPx * w + 3) / 4) * 4
-    val dataOffset = 54
-    val size = dataOffset + stride * h
-    val b = new Array[Byte](size)
-    def le16(i: Int, v: Int): Unit = { b(i) = v.toByte; b(i + 1) = (v >> 8).toByte }
-    def le32(i: Int, v: Int): Unit = {
-      b(i) = v.toByte; b(i + 1) = (v >> 8).toByte
-      b(i + 2) = (v >> 16).toByte; b(i + 3) = (v >> 24).toByte
+  private def decodeLuma(b: Array[Byte]): (Int, Int, Array[Byte]) = {
+    if (b == null || b.length < 8) return null
+    val fmt = ImageHeader.sniff(b)
+    if (fmt == null || !containerOk(fmt, b)) return null
+    withReader[(Int, Int, Array[Byte])](b, fmt) { r =>
+      val w = r.getWidth(0)
+      val h = r.getHeight(0)
+      if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels || !rawTypeOk(r)) null
+      else luma(r.read(0), w, h)
     }
-    b(0) = 'B'; b(1) = 'M'
-    le32(2, size); le32(10, dataOffset)
-    le32(14, 40) // BITMAPINFOHEADER
-    le32(18, w); le32(22, if (topDown) -h else h)
-    le16(26, 1); le16(28, bpp)
-    le32(30, 0) // BI_RGB
+  }
+
+  /** Header-only (width, height) through the same reader; null when the
+    * header does not parse.
+    */
+  private[multimodal] def dimensions(b: Array[Byte], fmt: String): (Int, Int) =
+    withReader[(Int, Int)](b, fmt)(r => (r.getWidth(0), r.getHeight(0)))
+
+  private def withReader[T >: Null](b: Array[Byte], fmt: String)(f: ImageReader => T): T = {
+    val reader = readers(fmt).createReaderInstance()
+    val stream = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(b))
+    try {
+      reader.setInput(stream, true, true)
+      f(reader)
+    } catch {
+      case _: Exception => null
+      // ImageIO wraps some corrupt inputs in Errors — but genuine JVM
+      // failures (OutOfMemoryError, StackOverflowError) must fail the task,
+      // not masquerade as "undecodable image" (silent data loss on a
+      // possibly-corrupt JVM)
+      case e: java.lang.VirtualMachineError => throw e
+      case _: java.lang.Error => null
+    } finally {
+      reader.dispose()
+      try stream.close() catch { case _: java.io.IOException => () }
+    }
+  }
+
+  private def containerOk(fmt: String, b: Array[Byte]): Boolean = fmt match {
+    case "png" => pngFramed(b)
+    // BITMAPINFOHEADER or later, compression 0: BI_RGB only
+    case "bmp" => b.length >= 54 && le32(b, 14) >= 40 && le32(b, 30) == 0
+    case _ => true
+  }
+
+  /** Every chunk up to IEND lies inside the blob: ImageIO would otherwise
+    * decode a PNG whose tail is cut off.
+    */
+  private def pngFramed(b: Array[Byte]): Boolean = {
+    var off = 8
+    while (off + 8 <= b.length) {
+      val len = be32(b, off)
+      if (len < 0 || off + 12L + len > b.length) return false
+      if (b(off + 4) == 'I' && b(off + 5) == 'E' && b(off + 6) == 'N' && b(off + 7) == 'D')
+        return true
+      off += 12 + len
+    }
+    false
+  }
+
+  private def rawTypeOk(r: ImageReader): Boolean = {
+    val t = r.getRawImageType(0)
+    t != null && t.getNumBands <= 4 &&
+      (t.getColorModel.isInstanceOf[IndexColorModel] ||
+        (0 until t.getNumBands).forall(t.getBitsPerBand(_) == 8))
+  }
+
+  /** Integer Rec.601 luma of 0xRRGGBB. */
+  private def rec601(c: Int): Int =
+    (299 * ((c >> 16) & 0xFF) + 587 * ((c >> 8) & 0xFF) + 114 * (c & 0xFF)) / 1000
+
+  private def luma(img: BufferedImage, w: Int, h: Int): (Int, Int, Array[Byte]) = {
+    val raster = img.getRaster
+    val cm = img.getColorModel
+    val palette = cm match {
+      case icm: IndexColorModel => Array.tabulate(icm.getMapSize)(i => rec601(icm.getRGB(i)))
+      case _ => null
+    }
+    val gray = cm.getColorSpace.getType == ColorSpace.TYPE_GRAY
+    val viaRgb = palette == null && !gray && !cm.getColorSpace.isCS_sRGB
+    val nb = if (viaRgb) 1 else raster.getNumBands
+    val row = new Array[Int](w * nb)
+    val out = new Array[Byte](w * h)
     var y = 0
     while (y < h) {
-      val fileRow = if (topDown) y else h - 1 - y
+      if (viaRgb) img.getRGB(0, y, w, 1, row, 0, w) else raster.getPixels(0, y, w, 1, row)
       var x = 0
       while (x < w) {
-        val c = rgb(x, y)
-        val p = dataOffset + fileRow * stride + x * bytesPerPx
-        b(p) = (c & 0xFF).toByte            // B
-        b(p + 1) = ((c >> 8) & 0xFF).toByte // G
-        b(p + 2) = ((c >> 16) & 0xFF).toByte // R
-        if (bytesPerPx == 4) b(p + 3) = 0xFF.toByte
+        val p = x * nb
+        val l =
+          if (palette != null) palette(row(p))
+          else if (gray) row(p)
+          else if (viaRgb) rec601(row(p))
+          else (299 * row(p) + 587 * row(p + 1) + 114 * row(p + 2)) / 1000
+        out(y * w + x) = l.toByte
         x += 1
       }
       y += 1
     }
-    b
+    (w, h, out)
   }
+}
 
-  /** The three analytically-hashable oracle patterns (pattern = doc_id % 3):
-    * 0 = left half black / right half white  → aHash 0x0F0F0F0F0F0F0F0F
-    * 1 = top half black / bottom half white  → aHash 0x00000000FFFFFFFF
-    * 2 = solid gray                          → aHash 0 (strict threshold)
-    */
-  val OraclePatterns: IndexedSeq[Array[Byte]] = IndexedSeq(
-    bmp(8, 8)((x, _) => if (x < 4) 0x000000 else 0xFFFFFF),
-    bmp(8, 8)((_, y) => if (y < 4) 0x000000 else 0xFFFFFF),
-    bmp(8, 8)((_, _) => 0x808080))
+/** The pinned 8×8 mean-threshold kernel over a decoded row-major luma
+  * raster. Definition (pinned — goldens and the SQL oracles depend on it):
+  *  - grayscale: integer Rec.601 luma  (299·R + 587·G + 114·B) / 1000,
+  *    computed upstream by the decoder
+  *  - resize: 8×8 box mean; cell (cx,cy) covers x ∈ [cx·w/8,(cx+1)·w/8)
+  *    (floor arithmetic; degenerate cells widen to ≥1 pixel so w,h < 8
+  *    still decode)
+  *  - threshold: bit (63 − (cy·8 + cx)) is set iff cellMean > globalMean
+  *    (strict: a solid image hashes to 0), compared in exact integer
+  *    arithmetic: cellSum·totalN > total·cellN (Long accumulators cannot
+  *    overflow: ≤ 2^24 px × 255 luma, times ≤ 2^24 px, < 2^63)
+  */
+private[multimodal] object AHashKernel {
 
-  val OracleHashes: IndexedSeq[Long] =
-    IndexedSeq(0x0F0F0F0F0F0F0F0FL, 0x00000000FFFFFFFFL, 0L)
+  def ahash(w: Int, h: Int, luma: Array[Byte]): Long = {
+    val sums = new Array[Long](64)
+    val counts = new Array[Long](64)
+    var cy = 0
+    while (cy < 8) {
+      val y0 = cy * h / 8
+      val y1 = math.max(y0 + 1, (cy + 1) * h / 8)
+      var y = y0
+      while (y < y1) {
+        var cx = 0
+        while (cx < 8) {
+          val x0 = cx * w / 8
+          val x1 = math.max(x0 + 1, (cx + 1) * w / 8)
+          var s = 0L
+          var x = x0
+          while (x < x1) { s += luma(y * w + x) & 0xFF; x += 1 }
+          val cell = cy * 8 + cx
+          sums(cell) += s
+          counts(cell) += (x1 - x0)
+          cx += 1
+        }
+        y += 1
+      }
+      cy += 1
+    }
+    var total = 0L; var totalN = 0L; var i = 0
+    while (i < 64) { total += sums(i); totalN += counts(i); i += 1 }
+    var hash = 0L
+    i = 0
+    while (i < 64) {
+      if (sums(i) * totalN > total * counts(i)) hash |= 1L << (63 - i)
+      i += 1
+    }
+    hash
+  }
 }
 
 /** Catalyst wrapper: binary → 64-bit aHash (LongType), null for anything
-  * but a decodable BMP, PNG, or GIF ([[PixelAHash]] routes by magic
-  * bytes). Scalar with codegen — rides inside project stages, composes
-  * with `bit_count(a ^ b)` Hamming directly.
+  * but a decodable BMP, PNG, GIF, TIFF or JPEG ([[PixelAHash]] routes by
+  * magic bytes). Scalar with codegen — rides inside project stages,
+  * composes with `bit_count(a ^ b)` Hamming directly.
   */
 case class ImageAHash(child: Expression) extends UnaryExpression {
 

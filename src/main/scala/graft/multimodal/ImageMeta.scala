@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Pure-JVM image header parsing — the REAL decode step for the multimodal
-  * metadata path (no codec dependency: dimensions live in the container
-  * header bytes). Web-text analog of the reference's per-format decoders +
-  * sniffing (image-deduper src/formats/{jpeg,png,tiff,raw,heic}.rs,
-  * `src/fixsuffix.rs:19-62`).
+/** Image header parsing — the REAL decode step for the multimodal metadata
+  * path (no codec dependency: dimensions live in the container header
+  * bytes, read here in pure JVM code; only TIFF's IFD walk is the JDK's
+  * ImageIO header read, shared with [[PixelAHash]]). Web-text analog of
+  * the reference's per-format decoders + sniffing (image-deduper
+  * src/formats/{jpeg,png,tiff,raw,heic}.rs, `src/fixsuffix.rs:19-62`).
   *
   * Corrupt-input contract mirrors `ExtractText`: malformed or truncated
   * bytes never throw — they return null and the caller degrades (to the
@@ -19,30 +20,47 @@ object ImageHeader {
 
   final case class Meta(format: String, width: Int, height: Int)
 
+  private def bytes(v: Int*): Array[Byte] = v.map(_.toByte).toArray
+
+  val PngSignature: Array[Byte] = bytes(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
+
+  private val Magics: Seq[(String, Array[Byte])] = Seq(
+    "png" -> PngSignature,
+    "gif" -> "GIF87a".getBytes("US-ASCII"), "gif" -> "GIF89a".getBytes("US-ASCII"),
+    "jpeg" -> bytes(0xFF, 0xD8),
+    "bmp" -> bytes('B', 'M'),
+    "tiff" -> bytes('I', 'I', 42, 0), "tiff" -> bytes('M', 'M', 0, 42))
+
+  /** Container format from the magic bytes alone — "png" | "gif" | "jpeg"
+    * | "bmp" | "tiff", or null. The one sniff behind both this header parse
+    * and [[PixelAHash]]'s reader choice; each parser below still checks its
+    * own minimum length. ([[Multimodal.sniffFormat]] is the SQL-column
+    * version.)
+    */
+  def sniff(b: Array[Byte]): String =
+    if (b == null) null
+    else Magics.collectFirst {
+      case (fmt, m) if b.length >= m.length && m.indices.forall(i => b(i) == m(i)) => fmt
+    }.orNull
+
   def parse(b: Array[Byte]): Meta = {
-    if (b == null) return null
-    try {
-      if (isPng(b)) parsePng(b)
-      else if (isGif(b)) parseGif(b)
-      else if (isJpeg(b)) parseJpeg(b)
-      else if (isBmp(b)) parseBmp(b)
-      else if (TiffPixels.isTiff(b)) parseTiff(b)
-      else null
+    try sniff(b) match {
+      case "png" => parsePng(b)
+      case "gif" => parseGif(b)
+      case "jpeg" => parseJpeg(b)
+      case "bmp" => parseBmp(b)
+      case "tiff" => parseTiff(b)
+      case _ => null
     } catch { case _: Exception => null }
   }
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
   private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def be32(b: Array[Byte], i: Int): Int =
+  private[multimodal] def be32(b: Array[Byte], i: Int): Int =
     (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
   private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
+  private[multimodal] def le32(b: Array[Byte], i: Int): Int =
     u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
-  private def isPng(b: Array[Byte]): Boolean =
-    b.length >= 8 && u8(b, 0) == 0x89 && u8(b, 1) == 'P' && u8(b, 2) == 'N' &&
-      u8(b, 3) == 'G' && u8(b, 4) == 0x0D && u8(b, 5) == 0x0A &&
-      u8(b, 6) == 0x1A && u8(b, 7) == 0x0A
 
   /** PNG: first chunk must be IHDR; width/height are BE32 at its start. */
   private def parsePng(b: Array[Byte]): Meta = {
@@ -53,18 +71,12 @@ object ImageHeader {
     if (w <= 0 || h <= 0) null else Meta("png", w, h)
   }
 
-  private def isGif(b: Array[Byte]): Boolean =
-    b.length >= 10 && u8(b, 0) == 'G' && u8(b, 1) == 'I' && u8(b, 2) == 'F' &&
-      u8(b, 3) == '8' && (u8(b, 4) == '7' || u8(b, 4) == '9') && u8(b, 5) == 'a'
-
   /** GIF87a/89a: logical-screen width/height, LE16 at offsets 6/8. */
   private def parseGif(b: Array[Byte]): Meta = {
+    if (b.length < 10) return null
     val w = le16(b, 6); val h = le16(b, 8)
     if (w <= 0 || h <= 0) null else Meta("gif", w, h)
   }
-
-  private def isJpeg(b: Array[Byte]): Boolean =
-    b.length >= 4 && u8(b, 0) == 0xFF && u8(b, 1) == 0xD8
 
   /** JPEG: walk the marker segments to the first frame header (SOF0..SOF15,
     * excluding DHT/JPG/DAC); height BE16 then width BE16 follow the
@@ -98,24 +110,25 @@ object ImageHeader {
     null
   }
 
-  private def isBmp(b: Array[Byte]): Boolean =
-    b.length >= 26 && u8(b, 0) == 'B' && u8(b, 1) == 'M'
-
   /** BMP (BITMAPINFOHEADER): width LE32 at 18, height LE32 (signed;
     * negative = top-down) at 22.
     */
   private def parseBmp(b: Array[Byte]): Meta = {
+    if (b.length < 26) return null
     val w = le32(b, 18); val h = math.abs(le32(b, 22))
     if (w <= 0 || h <= 0) null else Meta("bmp", w, h)
   }
 
-  /** TIFF: IFD0 walk for tags 256/257 (either byte order) — valid for any
+  /** TIFF: tags 256/257 from IFD0 (either byte order), read by the same
+    * ImageIO header read [[PixelAHash]] decodes with — valid for any
     * compression scheme, since dimensions never touch pixel data
     * (reference formats/tiff.rs:9-24).
     */
   private def parseTiff(b: Array[Byte]): Meta = {
-    val dims = TiffPixels.dimensions(b)
-    if (dims == null) null else Meta("tiff", dims._1, dims._2)
+    if (b.length < 8) return null
+    val dims = PixelAHash.dimensions(b, "tiff")
+    if (dims == null || dims._1 <= 0 || dims._2 <= 0) null
+    else Meta("tiff", dims._1, dims._2)
   }
 }
 

@@ -1,106 +1,5 @@
 package graft.multimodal
 
-/** REAL pixel-level decode for baseline JPEGs → the pinned 8×8
-  * mean-threshold kernel ([[AHashKernel]]; reference kernel image-deduper
-  * `src/processing/core.rs:37-104`, JPEG path `src/formats/jpeg.rs:8-31`).
-  *
-  * The decoder is the JDK's own `javax.imageio` JPEG plugin (java.desktop
-  * module — ships with every JRE, works headless, no external codec), so
-  * this path is as dependency-free as the hand-rolled BMP/PNG/GIF
-  * decoders; luma is then the SAME pinned integer Rec.601 over the
-  * decoded RGB, so identical pixels hash identically across all four
-  * containers. Dimensions are read from the HEADER (ImageReader) before
-  * any pixel decode, so the [[PngPixels.MaxPixels]] hostile-input cap is
-  * enforced without paying for the decode.
-  *
-  * Corrupt-input contract: malformed, truncated, oversized, or
-  * unsupported (e.g. arithmetic-coded) bytes return null, never throw.
-  */
-object JpegPixels {
-
-  // executor-safe one-time setup: no display, no tmp-file cache churn
-  private lazy val ready: Unit = {
-    System.setProperty("java.awt.headless", "true")
-    javax.imageio.ImageIO.setUseCache(false)
-  }
-
-  def isJpeg(b: Array[Byte]): Boolean =
-    b != null && b.length >= 3 &&
-      (b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8 && (b(2) & 0xFF) == 0xFF
-
-  /** Decode to (width, height, row-major luma); null when not a
-    * decodable, size-capped baseline JPEG.
-    */
-  def decodeLuma(b: Array[Byte]): (Int, Int, Array[Byte]) = {
-    if (!isJpeg(b)) return null
-    ready
-    var stream: javax.imageio.stream.ImageInputStream = null
-    var reader: javax.imageio.ImageReader = null
-    try {
-      stream = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val readers = javax.imageio.ImageIO.getImageReaders(stream)
-      if (!readers.hasNext) return null
-      reader = readers.next()
-      reader.setInput(stream, true, true)
-      // header-only geometry first: refuse decompression bombs before
-      // allocating a raster
-      val w = reader.getWidth(0)
-      val h = reader.getHeight(0)
-      if (w <= 0 || h <= 0 || w.toLong * h > PngPixels.MaxPixels) return null
-      val img = reader.read(0)
-      val luma = new Array[Byte](w * h)
-      val row = new Array[Int](w)
-      if (img.getColorModel.getNumComponents == 1) {
-        // grayscale: the raster's Y channel IS Rec.601 luma (JFIF defines Y
-        // with the same 299/587/114 weights). getRGB would be WRONG here —
-        // it maps through the linear-gray color model into sRGB, bending
-        // every mid-tone (128 → ~186).
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          raster.getSamples(0, y, w, 1, 0, row)
-          var x = 0
-          while (x < w) { luma(y * w + x) = row(x).toByte; x += 1 }
-          y += 1
-        }
-      } else {
-        // color: bulk row getRGB (sRGB ints), then the pinned integer luma
-        var y = 0
-        while (y < h) {
-          img.getRGB(0, y, w, 1, row, 0, w)
-          var x = 0
-          while (x < w) {
-            val c = row(x)
-            luma(y * w + x) = ((299 * ((c >> 16) & 0xFF) + 587 * ((c >> 8) & 0xFF) +
-              114 * (c & 0xFF)) / 1000).toByte
-            x += 1
-          }
-          y += 1
-        }
-      }
-      (w, h, luma)
-    } catch {
-      case _: Exception => null
-      // ImageIO wraps some corrupt inputs in Errors — but genuine JVM
-      // failures (OutOfMemoryError, StackOverflowError) must fail the
-      // task, not masquerade as "undecodable image" (silent data loss on
-      // a possibly-corrupt JVM); TiffAHash documents the same boundary
-      case e: java.lang.VirtualMachineError => throw e
-      case _: java.lang.Error => null
-    } finally {
-      if (reader != null) reader.dispose()
-      if (stream != null) try stream.close() catch { case _: Exception => () }
-    }
-  }
-
-  def ahash(b: Array[Byte]): java.lang.Long = {
-    val img = decodeLuma(b)
-    if (img == null) null
-    else java.lang.Long.valueOf(AHashKernel.ahash(img._1, img._2, img._3))
-  }
-}
-
 /** Deterministic JPEG synthesis for the closed-form oracle: a minimal
   * BASELINE GRAYSCALE encoder (SOI/DQT/SOF0/DHT/SOS/EOI with the ITU
   * T.81 Annex K typical Huffman tables) that only encodes images whose

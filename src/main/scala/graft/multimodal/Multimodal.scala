@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
   * `binary` columns with typed metadata structs.
   *
   * Image DIMENSION decode is REAL: [[ImageHeader]] parses PNG/GIF/JPEG/BMP/
-  * TIFF container headers in pure JVM bytes (dimensions never need a codec).
-  * Image PIXEL decode is REAL for BMP/PNG/GIF/JPEG/TIFF ([[BmpAHash]],
-  * [[PngPixels]], [[GifPixels]], [[TiffPixels]] hand-rolled; [[JpegPixels]]
-  * via the JDK's own ImageIO plugin → [[PixelAHash]]); only video frame EXTRACTION
+  * TIFF container headers (dimensions never need a codec). Image PIXEL
+  * decode is REAL for the same five formats through one path, the JDK's
+  * own ImageIO plugins ([[PixelAHash]]); only video frame EXTRACTION
   * remains stubbed: `fakeDecodeMeta` derives
   * deterministic stand-in metadata from the byte stream, clearly marked,
   * and the frame-sampling plan runs on it. Everything around the stub — schema,
@@ -29,8 +28,8 @@ object Multimodal {
     shim.toColumn(ImageMeta(shim.toExpression(blob)))
   }
 
-  /** REAL pixel-level perceptual hash for uncompressed BMPs, 8-bit
-    * non-interlaced PNGs, GIF first frames, and baseline JPEGs (the
+  /** REAL pixel-level perceptual hash for BI_RGB BMPs, PNGs, GIF first
+    * frames, TIFFs and JPEGs with 8-bit (or palette-indexed) samples (the
     * reference's aHash kernel, `processing/core.rs:37-104`): binary →
     * 64-bit mean-threshold average hash, null for malformed/unsupported
     * bytes. Compose with `bit_count(a ^ b)` for perceptual Hamming.
@@ -114,7 +113,7 @@ object Multimodal {
 
   /** Full metadata projection for a binary column: real sniffing + byte
     * stats + REAL header dimensions where the format carries them (PNG/
-    * GIF/JPEG/BMP), falling back to the stand-in metadata for opaque
+    * GIF/JPEG/BMP/TIFF), falling back to the stand-in metadata for opaque
     * payloads; n_frames is always the stand-in (video decode is the
     * declared stub).
     */

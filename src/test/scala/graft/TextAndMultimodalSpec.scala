@@ -94,54 +94,52 @@ class TextAndMultimodalSpec extends SparkTestBase {
   }
 
   test("BmpAHash goldens: real pixel decode -> 8x8 mean-threshold hash") {
-    import graft.multimodal.{BmpAHash, BmpSynth}
+    import graft.multimodal.{BmpSynth, PixelAHash}
     // the three analytic oracle patterns, pinned to their closed-form hashes
     // (mirrors the reference's synthesized-image goldens,
     // processing_tests.rs:93-119)
     BmpSynth.OraclePatterns.zip(BmpSynth.OracleHashes).foreach { case (b, h) =>
-      assert(BmpAHash.ahash(b) == h)
+      assert(PixelAHash.ahash(b) == h)
     }
     // kernel is invariant to the BMP container encoding: 32-bpp, top-down
     // row order, and non-8 dimensions (padded strides, box-mean cells) all
     // hash identically to the canonical 24-bpp bottom-up 8x8
     val leftRight: (Int, Int) => Int = (x, _) => if (x < 4) 0x000000 else 0xFFFFFF
-    assert(BmpAHash.ahash(BmpSynth.bmp(8, 8, bpp = 32)(leftRight)) == 0x0F0F0F0F0F0F0F0FL)
-    assert(BmpAHash.ahash(BmpSynth.bmp(8, 8, topDown = true)(leftRight)) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(BmpSynth.bmp(8, 8, bpp = 32)(leftRight)) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(BmpSynth.bmp(8, 8, topDown = true)(leftRight)) == 0x0F0F0F0F0F0F0F0FL)
     val bigLeftRight = BmpSynth.bmp(100, 60)((x, _) => if (x < 50) 0x101010 else 0xF0F0F0)
-    assert(BmpAHash.ahash(bigLeftRight) == 0x0F0F0F0F0F0F0F0FL) // odd stride: 100*3 pads to 304
+    assert(PixelAHash.ahash(bigLeftRight) == 0x0F0F0F0F0F0F0F0FL) // odd stride: 100*3 pads to 304
     val tiny = BmpSynth.bmp(4, 4)((x, _) => if (x < 2) 0x000000 else 0xFFFFFF)
-    assert(BmpAHash.ahash(tiny) == 0x0F0F0F0F0F0F0F0FL) // cells widen below 8px
+    assert(PixelAHash.ahash(tiny) == 0x0F0F0F0F0F0F0F0FL) // cells widen below 8px
     // a near-dup pair (one flipped cell) lands at Hamming 1 of each other
     val oneOff = BmpSynth.bmp(8, 8)((x, y) =>
       if (x == 7 && y == 7) 0x000000 else if (x < 4) 0x000000 else 0xFFFFFF)
     assert(java.lang.Long.bitCount(
-      BmpAHash.ahash(oneOff) ^ 0x0F0F0F0F0F0F0F0FL) == 1)
+      PixelAHash.ahash(oneOff) ^ 0x0F0F0F0F0F0F0F0FL) == 1)
     // corrupt-input contract: null, never throw
     val good = BmpSynth.OraclePatterns(0)
-    assert(BmpAHash.ahash(null) == null)
-    assert(BmpAHash.ahash(good.take(53)) == null)          // truncated header
-    assert(BmpAHash.ahash(good.take(100)) == null)         // truncated pixels
-    assert(BmpAHash.ahash("BM then garbage bytes here padded out to length".getBytes) == null)
+    assert(PixelAHash.ahash(null) == null)
+    assert(PixelAHash.ahash(good.take(53)) == null)          // truncated header
+    assert(PixelAHash.ahash(good.take(100)) == null)         // truncated pixels
+    assert(PixelAHash.ahash("BM then garbage bytes here padded out to length".getBytes) == null)
     val rle = good.clone(); rle(30) = 1                    // BI_RLE8 compression
-    assert(BmpAHash.ahash(rle) == null)
+    assert(PixelAHash.ahash(rle) == null)
     val bpp16 = good.clone(); bpp16(28) = 16               // unsupported depth
-    assert(BmpAHash.ahash(bpp16) == null)
-    val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-    assert(BmpAHash.ahash(png) == null)                    // BMP decoder: not its format
+    assert(PixelAHash.ahash(bpp16) == null)
   }
 
   test("PngAHash goldens: real inflate + unfilter decode matches the pinned kernel") {
-    import graft.multimodal.{BmpSynth, PngPixels, PngSynth}
+    import graft.multimodal.{BmpSynth, PixelAHash, PngSynth}
     // the three analytic patterns are pixel-identical to the BMP goldens →
     // identical closed-form hashes
     PngSynth.OraclePatterns.zip(BmpSynth.OracleHashes).foreach { case (b, h) =>
-      assert(PngPixels.ahash(b) == h)
+      assert(PixelAHash.ahash(b) == h)
     }
     val leftRight: (Int, Int) => Int = (x, _) => if (x < 4) 0x000000 else 0xFFFFFF
     // kernel is container-invariant: gray, RGBA, and palette color types all
     // hash identically to the canonical RGB encoding
     for (ct <- Seq(0, 2, 3, 6))
-      assert(PngPixels.ahash(PngSynth.png(8, 8, colorType = ct)(leftRight)) ==
+      assert(PixelAHash.ahash(PngSynth.png(8, 8, colorType = ct)(leftRight)) ==
         0x0F0F0F0F0F0F0F0FL, s"colorType $ct")
     // ALL FIVE scanline filters (None/Sub/Up/Average/Paeth) round-trip: a
     // gradient encoded with each filter per row decodes to the same hash as
@@ -149,33 +147,35 @@ class TextAndMultimodalSpec extends SparkTestBase {
     val gradient: (Int, Int) => Int = (x, y) => {
       val v = (x * 13 + y * 29) % 256; (v << 16) | (v << 8) | v
     }
-    val plain = PngPixels.ahash(PngSynth.png(40, 40)(gradient))
+    val plain = PixelAHash.ahash(PngSynth.png(40, 40)(gradient))
     for (f <- 1 to 4)
-      assert(PngPixels.ahash(PngSynth.png(40, 40, filterFor = _ => f)(gradient)) ==
+      assert(PixelAHash.ahash(PngSynth.png(40, 40, filterFor = _ => f)(gradient)) ==
         plain, s"filter $f")
-    assert(PngPixels.ahash(PngSynth.png(40, 40, filterFor = y => y % 5)(gradient)) ==
+    assert(PixelAHash.ahash(PngSynth.png(40, 40, filterFor = y => y % 5)(gradient)) ==
       plain, "mixed filters")
     // non-8 dims: box-mean cells widen/aggregate exactly like the BMP path
     val bigLeftRight = PngSynth.png(100, 60)((x, _) => if (x < 50) 0x101010 else 0xF0F0F0)
-    assert(PngPixels.ahash(bigLeftRight) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(bigLeftRight) == 0x0F0F0F0F0F0F0F0FL)
     // corrupt-input contract: null, never throw
     val good = PngSynth.OraclePatterns(0)
-    assert(PngPixels.ahash(null) == null)
-    assert(PngPixels.ahash(good.take(20)) == null)           // truncated IHDR
-    assert(PngPixels.ahash(good.dropRight(20)) == null)      // truncated IDAT
-    val interlaced = good.clone(); interlaced(28) = 1        // Adam7: unsupported
-    assert(PngPixels.ahash(interlaced) == null)
+    assert(PixelAHash.ahash(null) == null)
+    assert(PixelAHash.ahash(good.take(20)) == null)           // truncated IHDR
+    assert(PixelAHash.ahash(good.dropRight(20)) == null)      // truncated IDAT
+    // Adam7 flag set on non-interlaced data: the seven-pass layout needs
+    // more scanline bytes than the stream holds, so it is corrupt data
+    val interlaced = good.clone(); interlaced(28) = 1
+    assert(PixelAHash.ahash(interlaced) == null)
     val deep = good.clone(); deep(24) = 16                   // 16-bit: unsupported
-    assert(PngPixels.ahash(deep) == null)
+    assert(PixelAHash.ahash(deep) == null)
     val garbageIdat = good.clone()
     val idatData = good.indexOfSlice("IDAT".getBytes) + 4
     garbageIdat(idatData) = 0x55                             // invalid zlib header
-    assert(PngPixels.ahash(garbageIdat) == null)
-    assert(PngPixels.ahash("not a png at all, just text bytes".getBytes) == null)
+    assert(PixelAHash.ahash(garbageIdat) == null)
+    assert(PixelAHash.ahash("not a png at all, just text bytes".getBytes) == null)
     // decompression-bomb bound: a legal PNG describing > MaxPixels is refused
     val bombIhdr = good.clone()
     bombIhdr(16) = 0x7F.toByte // width = huge
-    assert(PngPixels.ahash(bombIhdr) == null)
+    assert(PixelAHash.ahash(bombIhdr) == null)
     // hostile FDICT stream: zlib header 0x78 0x20 (checksum-valid, FDICT bit
     // set) makes Inflater return 0 with needsDictionary() — PNG forbids
     // preset dictionaries, and an undecodable stream must return null in
@@ -185,28 +185,28 @@ class TextAndMultimodalSpec extends SparkTestBase {
     val fdict = good.clone()
     fdict(idatData) = 0x78.toByte
     fdict(idatData + 1) = 0x20.toByte
-    failAfter(10.seconds) { assert(PngPixels.ahash(fdict) == null) }
+    failAfter(10.seconds) { assert(PixelAHash.ahash(fdict) == null) }
   }
 
   test("TiffAHash goldens: IFD walk + uncompressed strip decode matches the pinned kernel") {
-    import graft.multimodal.{BmpSynth, TiffPixels, TiffSynth}
+    import graft.multimodal.{BmpSynth, PixelAHash, TiffSynth}
     // analytic patterns (LE RGB / BE RGB / gray) are pixel-identical to the
     // BMP goldens → identical closed-form hashes
     TiffSynth.OraclePatterns.zip(BmpSynth.OracleHashes).foreach { case (b, h) =>
-      assert(TiffPixels.ahash(b) == h)
+      assert(PixelAHash.ahash(b) == h)
     }
     val leftRight: (Int, Int) => Int = (x, _) => if (x < 4) 0x000000 else 0xFFFFFF
     // kernel is container-invariant across byte order, photometric mode,
     // and strip organization
-    assert(TiffPixels.ahash(TiffSynth.tiff(8, 8, littleEndian = false)(leftRight)) ==
+    assert(PixelAHash.ahash(TiffSynth.tiff(8, 8, littleEndian = false)(leftRight)) ==
       0x0F0F0F0F0F0F0F0FL)
-    assert(TiffPixels.ahash(TiffSynth.tiff(8, 8, gray = true)(leftRight)) ==
+    assert(PixelAHash.ahash(TiffSynth.tiff(8, 8, gray = true)(leftRight)) ==
       0x0F0F0F0F0F0F0F0FL)
-    assert(TiffPixels.ahash(TiffSynth.tiff(8, 8, rowsPerStrip = 3)(leftRight)) ==
+    assert(PixelAHash.ahash(TiffSynth.tiff(8, 8, rowsPerStrip = 3)(leftRight)) ==
       0x0F0F0F0F0F0F0F0FL) // 3 strips of 3/3/2 rows
     val big = TiffSynth.tiff(100, 60, rowsPerStrip = 7)((x, _) =>
       if (x < 50) 0x101010 else 0xF0F0F0)
-    assert(TiffPixels.ahash(big) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(big) == 0x0F0F0F0F0F0F0F0FL)
     // photometric 0 (WhiteIsZero) inverts samples: flip the tag on a gray
     // encoding and the decode must equal the color-swapped image
     def valueAt(b: Array[Byte], w: Int, h: Int, spp: Int, entryIdx: Int): Int =
@@ -216,81 +216,81 @@ class TextAndMultimodalSpec extends SparkTestBase {
     inverted(valueAt(inverted, 8, 8, 1, 4)) = 0 // tag 262 LE SHORT: 1 -> 0
     val swapped = TiffSynth.tiff(8, 8, gray = true)((x, _) =>
       if (x < 4) 0xFFFFFF else 0x000000)
-    assert(TiffPixels.ahash(inverted) == TiffPixels.ahash(swapped))
+    assert(PixelAHash.ahash(inverted) == PixelAHash.ahash(swapped))
     // compressed strips (Deflate and PackBits, each strip independently
     // encoded) decode to the same raster — and multi-strip + compression
     // compose
     val gradient: (Int, Int) => Int = (x, y) => {
       val v = (x * 13 + y * 29) % 256; (v << 16) | (v << 8) | v
     }
-    val plainHash = TiffPixels.ahash(TiffSynth.tiff(40, 40)(gradient))
+    val plainHash = PixelAHash.ahash(TiffSynth.tiff(40, 40)(gradient))
     for (comp <- Seq(8, 32773); strip <- Seq(Int.MaxValue, 7))
-      assert(TiffPixels.ahash(
+      assert(PixelAHash.ahash(
         TiffSynth.tiff(40, 40, rowsPerStrip = strip, compression = comp)(gradient))
         == plainHash, s"compression $comp rowsPerStrip $strip")
-    assert(TiffPixels.ahash(TiffSynth.tiff(8, 8, gray = true, littleEndian = false,
+    assert(PixelAHash.ahash(TiffSynth.tiff(8, 8, gray = true, littleEndian = false,
       compression = 8)(leftRight)) == 0x0F0F0F0F0F0F0F0FL)
-    // a corrupt Deflate strip nulls cleanly (and in bounded time — the
-    // zero-progress inflater guard)
+    // a corrupt Deflate strip nulls cleanly
     val badZ = TiffSynth.tiff(8, 8, compression = 8)(leftRight)
     val zStart = 8 // first strip begins right after the header
     badZ(zStart) = 0x55
-    assert(TiffPixels.ahash(badZ) == null)
-    // header decode (any compression) vs pixel decode (supported set):
-    // flipping tag 259 to LZW keeps dimensions but nulls the hash
+    assert(PixelAHash.ahash(badZ) == null)
+    // header decode vs pixel decode: flipping tag 259 to LZW keeps the
+    // dimensions, but the uncompressed strip is not a valid LZW stream, so
+    // the pixels are rejected as corrupt data
     import graft.multimodal.ImageHeader
     val lzw = TiffSynth.OraclePatterns(0).clone()
     lzw(valueAt(lzw, 8, 8, 3, 3)) = 5 // tag 259 LE SHORT: 1 -> 5
     assert(ImageHeader.parse(lzw) == ImageHeader.Meta("tiff", 8, 8))
-    assert(TiffPixels.ahash(lzw) == null)
+    assert(PixelAHash.ahash(lzw) == null)
     // corrupt-input contract: null, never throw
     val good = TiffSynth.OraclePatterns(0)
-    assert(TiffPixels.ahash(null) == null)
-    assert(TiffPixels.ahash(good.take(6)) == null)           // truncated header
-    assert(TiffPixels.ahash(good.dropRight(10)) == null)     // truncated IFD tail
+    assert(PixelAHash.ahash(null) == null)
+    assert(PixelAHash.ahash(good.take(6)) == null)           // truncated header
+    assert(PixelAHash.ahash(good.dropRight(10)) == null)     // truncated IFD tail
     // 16-bit samples refused (gray encoding: tag 258 is inline, count 1)
     val deep = gray.clone(); deep(valueAt(deep, 8, 8, 1, 2)) = 16
-    assert(TiffPixels.ahash(deep) == null)
+    assert(PixelAHash.ahash(deep) == null)
     val bomb = TiffSynth.tiff(8, 8)(leftRight).clone()
     bomb(valueAt(bomb, 8, 8, 3, 0)) = 0xFF.toByte // width LONG LE low byte
     bomb(valueAt(bomb, 8, 8, 3, 0) + 2) = 0x7F.toByte // width ≈ 2^23: over cap
-    assert(TiffPixels.ahash(bomb) == null)
-    assert(TiffPixels.ahash("II* but not really a tiff file".getBytes) == null)
+    assert(PixelAHash.ahash(bomb) == null)
+    assert(PixelAHash.ahash("II* but not really a tiff file".getBytes) == null)
     // big-endian goldens decode identically through ImageHeader too
     assert(ImageHeader.parse(TiffSynth.OraclePatterns(1)) ==
       ImageHeader.Meta("tiff", 8, 8))
   }
 
   test("GifAHash goldens: real LZW decode matches the pinned kernel") {
-    import graft.multimodal.{BmpSynth, GifPixels, GifSynth}
+    import graft.multimodal.{BmpSynth, GifSynth, PixelAHash}
     GifSynth.OraclePatterns.zip(BmpSynth.OracleHashes).foreach { case (b, h) =>
-      assert(GifPixels.ahash(b) == h)
+      assert(PixelAHash.ahash(b) == h)
     }
     val leftRight: (Int, Int) => Int = (x, _) => if (x < 4) 0x000000 else 0xFFFFFF
     // interlaced encoding decodes to the same raster (de-interlace map)
     val topBottom: (Int, Int) => Int = (_, y) => if (y < 20) 0x000000 else 0xFFFFFF
-    assert(GifPixels.ahash(GifSynth.gif(40, 40)(topBottom)) ==
-      GifPixels.ahash(GifSynth.gif(40, 40, interlacedFlag = true)(topBottom)))
+    assert(PixelAHash.ahash(GifSynth.gif(40, 40)(topBottom)) ==
+      PixelAHash.ahash(GifSynth.gif(40, 40, interlacedFlag = true)(topBottom)))
     // >254-literal streams exercise the mid-stream CLEAR handling
     val big = GifSynth.gif(100, 60)((x, _) => if (x < 50) 0x101010 else 0xF0F0F0)
-    assert(GifPixels.ahash(big) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(big) == 0x0F0F0F0F0F0F0F0FL)
     // many-color image exercises dictionary growth across code widths
     val gradient = GifSynth.gif(64, 64)((x, y) => { val v = (x * 4 + y) % 256; (v << 16) | (v << 8) | v })
-    assert(GifPixels.ahash(gradient) != null)
+    assert(PixelAHash.ahash(gradient) != null)
     // corrupt-input contract
     val good = GifSynth.OraclePatterns(0)
-    assert(GifPixels.ahash(null) == null)
-    assert(GifPixels.ahash(good.take(10)) == null)           // truncated descriptor
-    assert(GifPixels.ahash(good.dropRight(10)) == null)      // truncated LZW data
-    assert(GifPixels.ahash("GIF89a but then garbage follows here".getBytes) == null)
+    assert(PixelAHash.ahash(null) == null)
+    assert(PixelAHash.ahash(good.take(10)) == null)           // truncated descriptor
+    assert(PixelAHash.ahash(good.dropRight(10)) == null)      // truncated LZW data
+    assert(PixelAHash.ahash("GIF89a but then garbage follows here".getBytes) == null)
   }
 
   test("JpegAHash goldens: block-uniform baseline JPEGs decode exactly") {
-    import graft.multimodal.{BmpSynth, JpegPixels, JpegSynth}
+    import graft.multimodal.{BmpSynth, JpegSynth, PixelAHash}
     // block-uniform blocks are DC-only with a flat-8 quant table, so the
     // lossy format round-trips these patterns EXACTLY — same closed forms
     JpegSynth.OraclePatterns.zip(BmpSynth.OracleHashes).foreach { case (b, h) =>
-      assert(JpegPixels.ahash(b) == h)
+      assert(PixelAHash.ahash(b) == h)
     }
     // a REAL ImageIO-encoded color JPEG of block-aligned solid halves:
     // every 8x8 block is uniform -> AC-free -> only bounded uniform DC
@@ -301,17 +301,58 @@ class TextAndMultimodalSpec extends SparkTestBase {
       im.setRGB(x, y, if (x < 32) 0x000000 else 0xFFFFFF)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(im, "jpg", bos))
-    assert(JpegPixels.ahash(bos.toByteArray) == 0x0F0F0F0F0F0F0F0FL)
+    assert(PixelAHash.ahash(bos.toByteArray) == 0x0F0F0F0F0F0F0F0FL)
     // corrupt-input contract: never throw; un-decodable -> null. A scan
     // truncated AFTER the header decodes LENIENTLY (ImageIO fills the
     // missing tail) — the right posture for crawl fingerprinting: hash
     // what decoded, rather than refusing an image that is 95% present.
     val good = JpegSynth.OraclePatterns(0)
-    assert(JpegPixels.ahash(null) == null)
-    assert(JpegPixels.ahash(good.take(20)) == null)          // truncated header
-    assert(JpegPixels.ahash(good.dropRight(30)) != null)     // truncated scan: lenient
-    assert(JpegPixels.ahash(
+    assert(PixelAHash.ahash(null) == null)
+    assert(PixelAHash.ahash(good.take(20)) == null)          // truncated header
+    assert(PixelAHash.ahash(good.dropRight(30)) != null)     // truncated scan: lenient
+    assert(PixelAHash.ahash(
       Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xE0.toByte)) == null)
+  }
+
+  test("colour-channel goldens: R, G and B land in their own bands in every container") {
+    import graft.multimodal.{BmpSynth, GifSynth, PixelAHash, PngSynth, TiffSynth}
+    // quadrants (TL, TR, BL, BR); pure-channel luma is R 76, G 149, B 29.
+    // Every golden above is gray, so a swapped band would pass them: here
+    // pattern 1 (mean 63.5) pins R and G above B, pattern 2 (mean 120.25)
+    // pins G above R — together no channel permutation keeps both hashes
+    def quads(tl: Int, tr: Int, bl: Int, br: Int): (Int, Int) => Int =
+      (x, y) => if (y < 4) (if (x < 4) tl else tr) else (if (x < 4) bl else br)
+    val cases = Seq(
+      quads(0xFF0000, 0x00FF00, 0x0000FF, 0x000000) -> 0xFFFFFFFF00000000L,
+      quads(0xFF0000, 0x00FF00, 0x808080, 0x808080) -> 0x0F0F0F0FFFFFFFFFL)
+    for (((rgb, expected), i) <- cases.zipWithIndex) {
+      val encodings = Seq(
+        "bmp24" -> BmpSynth.bmp(8, 8)(rgb),
+        "bmp32" -> BmpSynth.bmp(8, 8, bpp = 32)(rgb),
+        "png2" -> PngSynth.png(8, 8, colorType = 2)(rgb),
+        "png3" -> PngSynth.png(8, 8, colorType = 3)(rgb),
+        "png6" -> PngSynth.png(8, 8, colorType = 6)(rgb),
+        "tiff-le" -> TiffSynth.tiff(8, 8)(rgb),
+        "tiff-be" -> TiffSynth.tiff(8, 8, littleEndian = false)(rgb),
+        "gif" -> GifSynth.gif(8, 8)(rgb))
+      for ((name, b) <- encodings)
+        assert(PixelAHash.ahash(b) == expected, s"pattern $i $name")
+    }
+  }
+
+  test("a TIFF declaring 120 samples per pixel is refused at the header") {
+    import graft.multimodal.{ImageHeader, PixelAHash, TiffSynth}
+    // well-formed: an 8x8 image with 120 8-bit samples per pixel (a 960x8
+    // gray strip relabelled), which ImageIO itself would decode into a
+    // 120-band raster. The band gate refuses it before any raster exists —
+    // on a large header the same spp is a multi-GB allocation
+    val w0 = 8 * 120
+    val b = TiffSynth.tiff(w0, 8, gray = true)((x, _) => if (x < w0 / 2) 0 else 0xFFFFFF)
+    def valueAt(entryIdx: Int): Int = 8 + w0 * 8 + 2 + 12 * entryIdx + 8
+    b(valueAt(0)) = 8; b(valueAt(0) + 1) = 0 // tag 256 LE LONG: 960 -> 8
+    b(valueAt(6)) = 120                       // tag 277 LE SHORT: 1 -> 120
+    assert(ImageHeader.parse(b) == ImageHeader.Meta("tiff", 8, 8))
+    assert(PixelAHash.ahash(b) == null)
   }
 
   test("PixelAHash dispatch: one expression, four container formats, same hash") {
@@ -425,7 +466,7 @@ class TextAndMultimodalSpec extends SparkTestBase {
   }
 
   test("PngSynth: incompressible pixels still encode (growable deflate sink)") {
-    import graft.multimodal.{PngPixels, PngSynth}
+    import graft.multimodal.{PixelAHash, PngSynth}
     // pseudo-random pixels deflate to MORE than scan.length once stored-
     // block overhead (5 bytes / 64 KB) exceeds the old fixed buffer's 64
     // spare bytes — the old drain loop then spun forever. 760×760 RGB is
@@ -436,7 +477,7 @@ class TextAndMultimodalSpec extends SparkTestBase {
       (h & 0xFFFFFF).toInt
     }
     val png = PngSynth.png(760, 760)(noise)
-    assert(PngPixels.ahash(png) != null) // full decode round-trips
+    assert(PixelAHash.ahash(png) != null) // full decode round-trips
   }
 
   test("two image_ahash calls fuse into one codegen scope (fresh locals)") {
